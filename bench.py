@@ -490,8 +490,10 @@ def main() -> None:
     # 3). The kernel is sized to ~1 s so sustained contention
     # actually registers — the r06-era 0.1 s burst sat between
     # scheduler hiccups and read "quiet" during a +17% drift (r08
-    # verdict). Quiet-machine reference: ~0.6 s on the round-9 build
-    # host (local[32]).
+    # verdict). The probe spreads over every core of the session, so
+    # its quiet-machine value scales with $SPARK_GRAFT_CPUS (~0.6 s
+    # at local[32]); compare calib_sec only between runs on the same
+    # core count.
     def calibrate() -> float:
         best = float("inf")
         for _ in range(3):

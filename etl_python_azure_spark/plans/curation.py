@@ -40,6 +40,7 @@ from ..operators.dedup import (
 from ..operators.sampling import hash_bucket, quota_sample
 from ..operators.text import gopher_quality_flags
 from ..session import load_tables
+from ..sinks.files import rebalanced
 
 
 def curate_corpus(
@@ -138,9 +139,7 @@ def curate_corpus(
     # AQE-rebalance by the partition column before the sink (guide
     # §6): without it every upstream task emits one file per source
     # dir (~32x file inflation measured on the latinad sink, r15)
-    from ..sinks.files import _rebalanced
-
-    _rebalanced(capped, "source").write.mode("overwrite").partitionBy(
+    rebalanced(capped, "source").write.mode("overwrite").partitionBy(
         "source"
     ).parquet(out)
 
@@ -653,10 +652,8 @@ def curate_corpus_v3(
         counts["n_train_capped"] = capped.count()
     else:
         out = os.path.join(sink_root, "train")
-        from ..sinks.files import _rebalanced
-
         # file sizing: see curate_corpus (guide §6 rebalance-on-write)
-        _rebalanced(capped, "source").write.mode("overwrite").partitionBy(
+        rebalanced(capped, "source").write.mode("overwrite").partitionBy(
             "source"
         ).parquet(out)
         # schema-pinned read-back: see curate_corpus

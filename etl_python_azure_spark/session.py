@@ -21,8 +21,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-# local test box: 32 cores.  On a cluster, submit-time --master wins.
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# local runs: $SPARK_GRAFT_CPUS, else the cores this process may run on
+# (affinity, not the host's total, so a pinned container is not
+# oversubscribed). On a cluster, submit-time --master wins.
+_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -36,8 +38,9 @@ def get_spark(
     Parameters
     ----------
     master:
-        Defaults to ``local[$SPARK_GRAFT_CPUS]`` when no master is
-        already configured (cluster submit sets its own).
+        Defaults to ``local[$SPARK_GRAFT_CPUS]`` (or one slot per
+        usable core when unset) when no master is already configured
+        (cluster submit sets its own).
     shuffle_partitions:
         Initial shuffle partition count. Locally ~cores is right;
         at 100 TB set high (e.g. 2000+) and let AQE coalesce.
@@ -102,7 +105,8 @@ def eager_checkpoint(df):
     (spot fleets), swap in ``persist(MEMORY_AND_DISK_2)`` + count()
     or a reliable ``checkpoint()`` to a replicated store; locally
     and on stable fleets the eager local form wins (dd04a/d514
-    measurements).
+    measurements). ``sources.rest.records_to_df`` carries the same
+    caveat for its lazy ingestion checkpoint (SCALING.md).
     """
     if os.environ.get("SPARK_GRAFT_LAZY_PLANS") == "1":
         return df

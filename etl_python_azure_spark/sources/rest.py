@@ -3,7 +3,10 @@
 Restates the reference's four source shapes (SURVEY §2.1):
 
 - S1/S5 driver GET → table (:func:`fetch_json` + :func:`records_to_df`);
-  auth headers, raise-for-status (`L:39–75`, `S:114–144`).
+  auth headers, raise-for-status (`L:39–75`, `S:114–144`). The
+  payload is typed on the driver but handed to Spark as an RDD-backed
+  leaf, so the transforms stacked on it run in executor tasks instead
+  of being re-evaluated by the optimizer on every action.
 - S2 paginated/ordered fetch (:func:`paginated_fetch`) — the
   datatable ``length/start`` protocol (`L:77–126`).
 - S3 **distributed fan-out** (:func:`distributed_fetch`) — the
@@ -131,41 +134,57 @@ def records_to_df(
     """JSON records → DataFrame (`pandas.json_normalize` analog, N1).
 
     The records already sit parsed in the driver (they came through
-    one HTTP response, so they're bounded by definition) — the cheap
-    path is local Arrow inference (``pa.Table.from_pylist`` →
-    ``createDataFrame``): zero Spark jobs at plan time, and downstream
-    actions replay a LocalRelation instead of re-parsing JSON on
-    executors. Payloads Arrow can't type uniformly (mixed-type
-    fields, all-null columns) fall back to ``spark.read.json``
-    inference over a parallelized payload, which promotes to string
-    the way the reference's pandas path does. An explicit *schema*
-    also takes the read.json route (the 100 TB-safe mode for big
-    payloads — but genuinely big fan-outs belong in
-    :func:`distributed_fetch`, not here). Nested structs are
-    flattened to ``a_b`` columns like the reference's ``.``→``_``
-    rename.
+    one HTTP response, so they're bounded by definition), so types
+    come from local Arrow inference (``pa.Table.from_pylist`` →
+    ``createDataFrame``) with no inference job. The frame that comes
+    back is backed by an RDD (a lazy ``localCheckpoint``), not a
+    ``LocalRelation``: Catalyst's ``ConvertToLocalRelation`` evaluates
+    every Project/Filter over a ``LocalRelation`` on the driver, in
+    interpreted mode, each time a plan over it is optimized: once
+    per action, again per appearance in a plan, and again inside
+    AQE's re-optimization. For 10k Sercom tasks under the flatten +
+    timestamp-parse chain that rule took 1.4-1.7 s of driver time per
+    incremental run on 4 cores; over the checkpointed leaf the same
+    expressions run as generated code in executor tasks. The first
+    action stores the rows executor-side, so later actions do not
+    rebuild them; like every ``localCheckpoint`` those blocks are not
+    replicated and have no lineage to recompute from (SCALING.md).
+
+    Payloads Arrow can't type the way JSON inference would (mixed-type
+    fields, all-null or empty-list-only fields, ints beyond int64)
+    fall back to ``spark.read.json`` inference over a parallelized
+    payload, which promotes to string the way the reference's pandas
+    path does. An explicit *schema* also takes the read.json route
+    (genuinely big fan-outs belong in :func:`distributed_fetch`, not
+    here). Nested structs are flattened to ``a_b`` columns like the
+    reference's ``.``→``_`` rename.
     """
-    if schema is None and records:
-        df = _arrow_local_df(spark, records)
-        if df is not None:
-            return flatten_struct_columns(df) if flatten else df
-    sc = spark.sparkContext
-    rdd = sc.parallelize([json.dumps(r) for r in records] or [""])
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.json(rdd)
+    df = _arrow_df(spark, records) if schema is None and records else None
+    if df is None:
+        df = _json_df(spark, records, schema)
     return flatten_struct_columns(df) if flatten else df
 
 
-def _arrow_local_df(spark: SparkSession, records: list[dict]) -> DataFrame | None:
-    """Local no-job inference: list of dicts → Arrow table → DF.
+def _json_df(
+    spark: SparkSession, records: list[dict], schema: T.StructType | str | None = None
+) -> DataFrame:
+    """``spark.read.json`` over the parallelized payload (one
+    inference job unless *schema* is given)."""
+    rdd = spark.sparkContext.parallelize([json.dumps(r) for r in records] or [""])
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.json(rdd)
+
+
+def _arrow_df(spark: SparkSession, records: list[dict]) -> DataFrame | None:
+    """No-job inference: list of dicts → Arrow table → RDD-backed DF.
 
     Returns None when Arrow inference would diverge from JSON
     inference (mixed types raise; all-null fields infer as Arrow
     ``null`` where read.json says string) — caller falls back.
     Columns are sorted alphabetically to match read.json's field
-    ordering.
+    ordering (Arrow already sorts nested struct fields).
     """
     import pyarrow as pa
 
@@ -186,7 +205,8 @@ def _arrow_local_df(spark: SparkSession, records: list[dict]) -> DataFrame | Non
     keys: set[str] = set()
     for r in records:
         keys.update(r)
-    normalized = [{k: r.get(k) for k in keys} for r in records]
+    columns = sorted(keys)
+    normalized = [{k: r.get(k) for k in columns} for r in records]
     try:
         tbl = pa.Table.from_pylist(normalized)
     except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError):
@@ -194,8 +214,8 @@ def _arrow_local_df(spark: SparkSession, records: list[dict]) -> DataFrame | Non
         return None
     if any(has_null_type(f.type) for f in tbl.schema):
         return None
-    df = spark.createDataFrame(tbl)
-    return df.select(*sorted(df.columns))
+    # lazy: no job here; the first action materializes the blocks
+    return spark.createDataFrame(tbl).localCheckpoint(eager=False)
 
 
 def distributed_fetch(

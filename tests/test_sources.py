@@ -7,6 +7,8 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from etl_python_azure_spark.schema import flatten_struct_columns
+from etl_python_azure_spark.sources import rest
 from etl_python_azure_spark.sources.rest import (
     distributed_fetch,
     fetch_json,
@@ -54,6 +56,87 @@ def test_records_to_df_flattens_nested(spark):
     assert set(df.columns) == {"id", "audience_provider_id", "audience_provider_name"}
     got = {r.id: r.audience_provider_name for r in df.collect()}
     assert got == {1: "prov", 2: None}
+
+
+def test_records_to_df_plans_over_an_rdd_not_a_local_relation(spark):
+    """A LocalRelation leaf would make Catalyst's ConvertToLocalRelation
+    evaluate the whole parse chain on the driver at every action. The
+    lazy checkpoint behind the frame must also give the same rows to a
+    second, different action."""
+    recs = [
+        {
+            "id": i,
+            "updated_at": f"2024-03-{i % 28 + 1:02d}T{i % 24:02d}:30:00",
+            "team": {"id": str(i % 30) if i % 4 else None},
+        }
+        for i in range(2000)
+    ]
+    df = (
+        records_to_df(spark, recs)
+        .withColumn("updated_at", F.to_timestamp("updated_at"))
+        .withColumn("team_id", F.col("team_id").cast("bigint"))
+        .filter(F.col("id") % 2 == 0)
+    )
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" not in plan
+    first = sorted(df.collect())
+    again = df.orderBy(F.col("id").desc()).collect()
+    assert len(first) == 1000
+    assert sorted(again) == first
+    assert first[3].id == 6 and str(first[3].updated_at) == "2024-03-07 06:30:00"
+    assert first[3].team_id == 6 and first[2].team_id is None
+
+
+# payload, and whether Arrow can type it like read.json (else fallback)
+_TWIN_PAYLOADS = {
+    "ragged_keys": (
+        [{"b": "x", "a": 1}, {"a": 2, "c": 1.5}, {"d": True}, {}],
+        True,
+    ),
+    "null_nested_struct": (
+        [
+            {"id": 1, "p": {"name": "prov", "id": 9}},
+            {"id": 2, "p": None},
+            {"id": 3, "p": {"id": 4}},
+        ],
+        True,
+    ),
+    "null_until_late": (
+        [{"id": i, "v": None, "s": None} for i in range(60)]
+        + [{"id": 60, "v": "late", "s": {"k": 1.5}}],
+        True,
+    ),
+    "empty_list": (
+        [{"id": 1, "tags": []}, {"id": 2, "tags": ["a", "b"]}, {"id": 3, "tags": None}],
+        True,
+    ),
+    "list_of_structs": (
+        [{"w": [{"z": 1, "a": "s"}, {"a": "t"}]}, {"w": []}],
+        True,
+    ),
+    "only_empty_lists": ([{"id": 1, "tags": []}, {"id": 2, "tags": []}], False),
+    "all_null_field": ([{"id": 1, "v": None}, {"id": 2, "v": None}], False),
+    "mixed_int_string": ([{"v": 1}, {"v": "a"}], False),
+    "mixed_bool_int": ([{"v": True}, {"v": 1}], False),
+    "mixed_list_struct": ([{"v": [1]}, {"v": {"a": 1}}], False),
+    "beyond_int64": ([{"v": 1}, {"v": 2**70}], False),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_TWIN_PAYLOADS))
+def test_records_to_df_arrow_path_matches_read_json(spark, name):
+    """Twin paths: Arrow inference and the read.json fallback give the
+    same columns, types and rows, flattened or not; payloads Arrow
+    cannot type the same way must take the fallback."""
+    recs, arrow_ok = _TWIN_PAYLOADS[name]
+    assert (rest._arrow_df(spark, recs) is not None) == arrow_ok
+    twin = rest._json_df(spark, recs)
+    for got, want in (
+        (records_to_df(spark, recs, flatten=False), twin),
+        (records_to_df(spark, recs), flatten_struct_columns(twin)),
+    ):
+        assert got.schema == want.schema
+        assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
 
 
 # module-level so it pickles cleanly to executors
